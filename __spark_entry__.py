@@ -604,17 +604,17 @@ def q_sim_knn_join(spark, sf_dir):
     from sparkrdf.similarity import knn_join
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return knn_join(emb, k=3, cell_col="label", dim=64)
+    return knn_join(emb, k=3, cell_col="label")
 
 
 def q_sim_topk(spark, sf_dir):
-    return brute_force_topk(_emb(spark, sf_dir), query_id=0, k=10, dim=64).select(
+    return brute_force_topk(_emb(spark, sf_dir), query_id=0, k=10).select(
         "vec_id", "score"
     )
 
 
 def q_sim_blocked_near_dup(spark, sf_dir):
-    return blocked_near_dup(_emb(spark, sf_dir), threshold=0.35, dim=64)
+    return blocked_near_dup(_emb(spark, sf_dir), threshold=0.35)
 
 
 def q_sim_ivf_topk(spark, sf_dir):
@@ -622,14 +622,14 @@ def q_sim_ivf_topk(spark, sf_dir):
     the per-label centroids (unnest + AVG by position), ranks cells by
     centroid cosine with the same (desc, cell asc) tie-break, and searches
     exactly inside the probed cells."""
-    return ivf_topk(_emb(spark, sf_dir), query_id=0, k=10, n_probe=2, dim=64)
+    return ivf_topk(_emb(spark, sf_dir), query_id=0, k=10, n_probe=2)
 
 
 def q_sim_ivf_exhaustive(spark, sf_dir):
     """IVF with n_probe >= |cells| degenerates to exact search, so the
     whole two-stage machinery (centroid build, cell probe, in-cell exact
     scan) is oracle-checked against the brute-force SQL as well."""
-    return ivf_topk(_emb(spark, sf_dir), query_id=0, k=10, n_probe=10**6, dim=64)
+    return ivf_topk(_emb(spark, sf_dir), query_id=0, k=10, n_probe=10**6)
 
 
 def q_sim_lsh_topk(spark, sf_dir):
@@ -2948,7 +2948,7 @@ def q_corpus_kmeans(spark, sf_dir):
     partial-aggregation float drift can never flip an assignment."""
     from sparkrdf.similarity import kmeans_assign
 
-    return kmeans_assign(_emb(spark, sf_dir), n_assign=2, dim=64)
+    return kmeans_assign(_emb(spark, sf_dir), n_assign=2)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparkrdf.localdf import collect_if_small, local_rows_df
 from sparkrdf.textops import fingerprint
 
 # MinHash parameters — shared with the oracle SQL generators
@@ -296,7 +297,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 16,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over an undirected pair list →
     (id, component) where component = MIN node id reachable from ``id``.
@@ -310,17 +310,8 @@ def connected_components(
     by node id; lineage is truncated per round (``localCheckpoint``) so the
     plan stays flat.
 
-    **Adaptive fast path** (same pattern as AQE picking a broadcast join
-    under a size threshold): the pair graph is already tiny relative to the
-    corpus after LSH + exact verification, and its materialized count is
-    known before the loop starts. When the directed edge count is ≤
-    ``small_graph_threshold`` (default 2M ≈ tens of MB on the driver,
-    far under executor-side round overhead × O(log d) jobs), a driver-side
-    union-find resolves components in one pass and one ``createDataFrame``
-    — byte-identical labels, ~10x less wall at benchmark scales. Pass
-    ``small_graph_threshold=0`` to force the distributed loop; at real
-    100 TB scale an over-threshold pair set takes that path automatically,
-    so driver memory stays bounded by construction.
+    Small pair graphs resolve by a driver-side union-find instead
+    (byte-identical labels; see :mod:`sparkrdf.localdf`).
     """
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
@@ -328,20 +319,15 @@ def connected_components(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    if edges.count() <= small_graph_threshold:
-        comp = _union_find_components(
-            (r["u"], r["v"]) for r in edges.collect()
+    rows = collect_if_small(edges)
+    if rows is not None:
+        comp = _union_find_components((r["u"], r["v"]) for r in rows)
+        idt = edges.schema["u"].dataType
+        return local_rows_df(
+            pairs.sparkSession,
+            sorted(comp.items()),
+            [("node", idt), ("component", idt)],
         )
-        spark = pairs.sparkSession
-        out_type = edges.schema["u"].dataType
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [T.StructField("node", out_type), T.StructField("component", out_type)]
-        )
-        from sparkrdf.localdf import local_rows_df
-
-        return local_rows_df(spark, sorted(comp.items()), schema)
     # start: every node labels itself
     labels = (
         edges.select(F.col("u").alias("node"))

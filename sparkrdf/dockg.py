@@ -102,10 +102,6 @@ def class_iri(cls: str) -> str:
     return f"{KG}class/{cls}"
 
 
-def load_documents(spark, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def doc_triples(spark, docs: DataFrame, with_adb_keys: bool = False) -> DataFrame:
     """documents → statements DataFrame (see module docstring).
 

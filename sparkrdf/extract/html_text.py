@@ -57,15 +57,3 @@ def extract_text(html: bytes | str) -> str:
         s = s.replace(ent, ch)
     s = _NUMERIC_ENT_RE.sub(_decode_numeric, s)
     return _WS_RE.sub(" ", s).strip()
-
-
-def extract_text_udf():
-    """Arrow-batched pandas UDF: binary html column → text column."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _extract(html: pd.Series) -> pd.Series:
-        return html.map(lambda b: extract_text(b) if b is not None else None)
-
-    return _extract

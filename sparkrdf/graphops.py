@@ -11,6 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+from sparkrdf.localdf import collect_if_small, local_rows_df
 
 
 def comention_edges(
@@ -101,14 +104,7 @@ def triangles(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
 def _ranks_df(spark, pr: dict, id_type, col: str = "pr") -> DataFrame:
     """(n, <col>) DataFrame from a driver score map — UNROUNDED; callers
     apply F.round so the rounding semantics (HALF_UP) stay Spark's own."""
-    from pyspark.sql import types as _T
-
-    schema = _T.StructType(
-        [_T.StructField("n", id_type), _T.StructField(col, _T.DoubleType())]
-    )
-    from sparkrdf.localdf import local_rows_df
-
-    return local_rows_df(spark, sorted(pr.items()), schema)
+    return local_rows_df(spark, sorted(pr.items()), [("n", id_type), (col, DoubleType())])
 
 
 def pagerank(
@@ -117,7 +113,6 @@ def pagerank(
     n_iter: int = 10,
     src: str = "u",
     dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over an undirected distinct-pair edge list (each edge walks
     both ways). Returns ``(n, pr)`` with pr rounded to 6 d.p. so float
@@ -134,21 +129,16 @@ def pagerank(
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
     de = e.unionAll(e.select(F.col("t").alias("s"), F.col("s").alias("t")))
     de = de.persist()
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # a power iteration over a collected edge list runs the IDENTICAL
-    # per-edge arithmetic (pr/deg contributions, same damping algebra);
-    # double-summation order differs, which the 6-d.p. output rounding
-    # absorbs by design — it already absorbs Spark's own nondeterministic
-    # partial-aggregation order run to run. Rounding itself stays in Spark
-    # (F.round below), so HALF_UP semantics are byte-identical. Larger
-    # graphs take the distributed loop automatically.
-    if de.count() <= small_graph_threshold:
-        pairs = [(r["s"], r["t"]) for r in de.collect()]
+    # driver fast path (sparkrdf.localdf): the same per-edge arithmetic; the
+    # summation order differs, which the Spark-side 6-d.p. rounding absorbs
+    rows = collect_if_small(de)
+    if rows is not None:
         de.unpersist()
+        pairs = [(r["s"], r["t"]) for r in rows]
         dg: dict = {}
         for s, _t2 in pairs:
             dg[s] = dg.get(s, 0) + 1
-        n_v = len(dg)
+        n_v = max(len(dg), 1)  # an empty graph ranks nothing
         base = (1.0 - damping) / n_v
         pr = {n: 1.0 / n_v for n in dg}
         for _ in range(n_iter):
@@ -160,7 +150,7 @@ def pagerank(
         return out_df.select("n", F.round("pr", 6).alias("pr"))
     deg = de.groupBy("s").agg(F.count("*").cast("double").alias("dg"))
     out = de.join(deg, "s").repartition("s").persist()
-    n_v = deg.count()
+    n_v = max(deg.count(), 1)
     de.unpersist()
     base = (1.0 - damping) / n_v
     ranks = deg.select(F.col("s").alias("n"), F.lit(1.0 / n_v).alias("pr"))
@@ -255,7 +245,6 @@ def kcore(
     rounds: int = 8,
     src: str = "u",
     dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """k-core membership by iterative peeling: repeatedly drop vertices of
     degree < k (degrees recomputed over the surviving subgraph) for a FIXED
@@ -277,12 +266,11 @@ def kcore(
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     cur = e.localCheckpoint(eager=True)
-    # Threshold-gated driver fast path: the fixed peeling rounds are pure
-    # integer degree counting over the edge MULTISET (duplicates and
-    # self-loops count exactly as in the aggregate) — bit-identical to the
-    # distributed loop; larger graphs take the distributed path.
-    if cur.count() <= small_graph_threshold:
-        pairs = [(r["u"], r["v"]) for r in cur.collect()]
+    # driver fast path (sparkrdf.localdf): integer degree counting over the
+    # edge MULTISET (duplicates and self-loops count as in the aggregate)
+    rows = collect_if_small(cur)
+    if rows is not None:
+        pairs = [(r["u"], r["v"]) for r in rows]
         for _ in range(rounds):
             dg: dict = {}
             for u, v in pairs:
@@ -294,16 +282,10 @@ def kcore(
         for u, v in pairs:
             dg[u] = dg.get(u, 0) + 1
             dg[v] = dg.get(v, 0) + 1
-        from pyspark.sql import types as _T
-
-        schema = _T.StructType(
-            [
-                _T.StructField("n", cur.schema["u"].dataType),
-                _T.StructField("deg", _T.LongType()),
-            ]
-        )
-        return edges.sparkSession.createDataFrame(
-            sorted((n, d) for n, d in dg.items() if d >= k), schema
+        return local_rows_df(
+            edges.sparkSession,
+            sorted((n, d) for n, d in dg.items() if d >= k),
+            [("n", cur.schema["u"].dataType), ("deg", LongType())],
         )
     for _ in range(rounds):
         deg = (
@@ -334,7 +316,6 @@ def pagerank_directed(
     src: str = "src_host",
     dst: str = "dst_host",
     weight: str = "n_links",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over a DIRECTED weighted edge list — the web-graph variant:
     link direction matters and sink nodes (linked-to hosts that link to
@@ -358,10 +339,9 @@ def pagerank_directed(
         F.col(weight).cast("double").alias("w"),
     )
     e = e.persist()
-    # driver fast path — see pagerank() for the exactness argument (same
-    # per-edge arithmetic, 6-d.p. rounding stays Spark-side)
-    if e.count() <= small_graph_threshold:
-        rows = [(r["s"], r["t"], r["w"]) for r in e.collect()]
+    # driver fast path — see pagerank() for the exactness argument
+    rows = collect_if_small(e)
+    if rows is not None:
         e.unpersist()
         ow: dict = {}
         nodes: set = set()
@@ -370,7 +350,7 @@ def pagerank_directed(
             nodes.add(s)
             nodes.add(t2)
         frac = [(s, t2, w / ow[s]) for s, t2, w in rows]
-        n_v = len(nodes)
+        n_v = max(len(nodes), 1)
         base = (1.0 - damping) / n_v
         pr = {n: 1.0 / n_v for n in nodes}
         for _ in range(n_iter):
@@ -403,7 +383,7 @@ def pagerank_directed(
         .select("n", F.col("_ho").isNull().alias("dang"))
         .localCheckpoint(eager=True)
     )
-    n_v = nodes.count()
+    n_v = max(nodes.count(), 1)
     base = (1.0 - damping) / n_v
     ranks = nodes.withColumn("pr", F.lit(1.0 / n_v))
     for _ in range(n_iter):
@@ -810,7 +790,6 @@ def _count_labels(nbrs: list, lab: dict) -> dict:
 
 def label_propagation(
     edges: DataFrame, iters: int = 4, src: str = "u", dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan,
     Albert & Kumara 2007), made deterministic: every node starts labeled
@@ -835,13 +814,12 @@ def label_propagation(
     und0 = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).dropDuplicates().localCheckpoint(eager=True)
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # synchronous LPA with the min-label tie-break is pure integer counting
-    # over strings — the driver loop is bit-identical to the distributed
-    # rounds; larger graphs take the distributed loop automatically.
-    if und0.count() <= small_graph_threshold:
+    # driver fast path (sparkrdf.localdf): LPA with the min-label tie-break
+    # is pure integer counting, bit-identical to the distributed rounds
+    rows = collect_if_small(und0)
+    if rows is not None:
         adj: dict = {}
-        for r in und0.collect():
+        for r in rows:
             adj.setdefault(r["u"], []).append(r["v"])
         lab = {n: n for n in adj}
         for _ in range(iters):
@@ -852,13 +830,10 @@ def label_propagation(
                 )[0]
                 for u, nbrs in adj.items()
             }
-        from pyspark.sql import types as _T
-
         idt = und0.schema["u"].dataType
-        schema = _T.StructType(
-            [_T.StructField("n", idt), _T.StructField("label", idt)]
+        return local_rows_df(
+            edges.sparkSession, sorted(lab.items()), [("n", idt), ("label", idt)]
         )
-        return edges.sparkSession.createDataFrame(sorted(lab.items()), schema)
     und = und0.repartition("v").localCheckpoint(eager=True)
     und0.unpersist()
     labels = und.select(F.col("u").alias("n")).dropDuplicates().select(
@@ -1272,7 +1247,7 @@ def reciprocity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
 
 def ktruss(
     edges: DataFrame, k: int, src: str = "u", dst: str = "v",
-    max_rounds: int = 30, small_graph_threshold: int = 2_000_000,
+    max_rounds: int = 30,
 ) -> DataFrame:
     """k-truss decomposition (Cohen 2008): the maximal subgraph in which
     every edge participates in at least ``k - 2`` triangles — the standard
@@ -1304,11 +1279,11 @@ def ktruss(
         .localCheckpoint(eager=True)
     )
     n = e.count()
-    # Threshold-gated driver fast path: per-edge triangle support is
-    # |N(u) ∩ N(v)| over the deduped simple graph — pure set arithmetic,
-    # bit-identical to the distributed enumerate-and-count peel.
-    if n <= small_graph_threshold:
-        pairs = [(r["u"], r["v"]) for r in e.collect()]
+    # driver fast path (sparkrdf.localdf): per-edge triangle support is
+    # |N(u) ∩ N(v)| — set arithmetic, bit-identical to the distributed peel
+    rows = collect_if_small(e, count=n)
+    if rows is not None:
+        pairs = [(r["u"], r["v"]) for r in rows]
         for _ in range(max_rounds):
             nbr: dict = {}
             for u, v in pairs:
@@ -1318,13 +1293,10 @@ def ktruss(
                 (u, v) for u, v in pairs if len(nbr[u] & nbr[v]) >= k - 2
             ]
             if len(kept) == len(pairs):
-                from pyspark.sql import types as _T
-
                 idt = e.schema["u"].dataType
-                schema = _T.StructType(
-                    [_T.StructField("u", idt), _T.StructField("v", idt)]
+                return local_rows_df(
+                    edges.sparkSession, sorted(kept), [("u", idt), ("v", idt)]
                 )
-                return edges.sparkSession.createDataFrame(sorted(kept), schema)
             pairs = kept
         raise RuntimeError(
             f"ktruss still peeling after {max_rounds} rounds (graph adversarially "
@@ -1412,7 +1384,6 @@ def assortativity(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame
 
 def coreness(
     edges: DataFrame, src: str = "u", dst: str = "v", max_rounds: int = 50,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Full k-core decomposition: every node's core NUMBER (the largest k
     such that the node survives k-core peeling) — the standard cohesion
@@ -1446,12 +1417,12 @@ def coreness(
     both = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)
-    # Threshold-gated driver fast path: the h-index iteration is pure
-    # integer arithmetic (degrees, sorted neighbor values, min/max) —
-    # bit-identical to the distributed rounds, same convergence raise.
-    if both.count() <= small_graph_threshold:
+    # driver fast path (sparkrdf.localdf): the h-index iteration is pure
+    # integer arithmetic, bit-identical to the distributed rounds
+    rows = collect_if_small(both)
+    if rows is not None:
         adj: dict = {}
-        for r in both.collect():
+        for r in rows:
             adj.setdefault(r["u"], []).append(r["v"])
         cv = {n: len(nbrs) for n, nbrs in adj.items()}
         for _ in range(max_rounds):
@@ -1468,16 +1439,10 @@ def coreness(
             changed = new != cv
             cv = new
             if not changed:
-                from pyspark.sql import types as _T
-
-                schema = _T.StructType(
-                    [
-                        _T.StructField("n", both.schema["u"].dataType),
-                        _T.StructField("coreness", _T.IntegerType()),
-                    ]
-                )
-                return edges.sparkSession.createDataFrame(
-                    sorted(cv.items()), schema
+                return local_rows_df(
+                    edges.sparkSession,
+                    sorted(cv.items()),
+                    [("n", both.schema["u"].dataType), ("coreness", IntegerType())],
                 )
         raise RuntimeError(
             f"coreness h-index iteration not converged after {max_rounds} rounds"
@@ -1582,7 +1547,6 @@ def scc(
     dst: str = "v",
     max_rounds: int = 40,
     max_prop_iter: int = 40,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Strongly connected components of a directed graph → ``(n, scc)``
     with ``scc`` = MIN member id — the distributed Forward-Backward-Trim
@@ -1628,23 +1592,14 @@ def scc(
         .dropDuplicates()
     )
     live_e = e0.localCheckpoint(eager=True)
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # the SCC labelling (n -> MIN member id) is algorithm-independent, so a
-    # one-pass iterative Tarjan over a collected edge list is byte-identical
-    # to the distributed loop at a fraction of the job count. The edge count
-    # is already materialized; over-threshold graphs take the distributed
-    # path automatically, so driver memory stays bounded by construction.
-    # small_graph_threshold=0 forces the distributed loop.
-    if live_e.count() <= small_graph_threshold:
-        comp = _scc_local((r["s"], r["t"]) for r in live_e.collect())
-        out_type = live_e.schema["s"].dataType
-        from pyspark.sql import types as _T
-
-        schema = _T.StructType(
-            [_T.StructField("n", out_type), _T.StructField("scc", out_type)]
-        )
-        return edges.sparkSession.createDataFrame(
-            sorted(comp.items()), schema
+    # driver fast path (sparkrdf.localdf): the labelling (n -> MIN member
+    # id) is algorithm-independent, so a one-pass Tarjan is byte-identical
+    rows = collect_if_small(live_e)
+    if rows is not None:
+        comp = _scc_local((r["s"], r["t"]) for r in rows)
+        idt = live_e.schema["s"].dataType
+        return local_rows_df(
+            edges.sparkSession, sorted(comp.items()), [("n", idt), ("scc", idt)]
         )
     live_n = (
         e0.select(F.col("s").alias("n"))
@@ -1798,7 +1753,6 @@ def neighborhood_function(
     max_t: int = 8,
     exact: bool = False,
     lg_k: int = 12,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Neighborhood function of a directed graph — ``(t, pairs)`` where
     ``pairs`` = number of ordered (a, b) pairs with dist(a → b) ≤ t, for
@@ -1832,13 +1786,13 @@ def neighborhood_function(
     )
     spark = edges.sparkSession
     if exact:
-        # Threshold-gated driver fast path: pair counts per distance are
-        # pure-integer BFS — bit-identical to the frontier join loop,
-        # including which t rows appear (BFS exhaustion = empty round).
-        if e.count() <= small_graph_threshold:
+        # driver fast path (sparkrdf.localdf): pair counts per distance are
+        # pure-integer BFS, bit-identical to the frontier join loop
+        rows = collect_if_small(e)
+        if rows is not None:
             adj: dict = {}
             node_set: set = set()
-            for r in e.collect():
+            for r in rows:
                 adj.setdefault(r["s"], []).append(r["t"])
                 node_set.add(r["s"])
                 node_set.add(r["t"])
@@ -1846,11 +1800,13 @@ def neighborhood_function(
             for a in node_set:
                 for _b, d in _bfs_dists(adj, a, max_t).items():
                     per_d[d] = per_d.get(d, 0) + 1
-            cum, rows = 0, []
+            cum, out = 0, []
             for t in sorted(per_d):
                 cum += per_d[t]
-                rows.append((t, cum))
-            return spark.createDataFrame(rows, "t int, pairs long")
+                out.append((t, cum))
+            return local_rows_df(
+                spark, out, [("t", IntegerType()), ("pairs", LongType())]
+            )
         dist = nodes.select(
             F.col("n").alias("a"), F.col("n").alias("b"), F.lit(0).alias("d")
         ).localCheckpoint(eager=True)
@@ -1913,7 +1869,6 @@ def harmonic_centrality(
     max_t: int = 8,
     exact: bool = False,
     lg_k: int = 12,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Harmonic centrality ``H(v) = Σ_{u≠v, d(u→v)<∞} 1/d(u → v)`` over
     incoming distances, depth-bounded at ``max_t`` — Boldi-Vigna's
@@ -1937,15 +1892,13 @@ def harmonic_centrality(
             .dropDuplicates()
             .localCheckpoint(eager=True)
         )
-        # Threshold-gated driver fast path: distances are exact integers;
-        # the Σ 1/d accumulation order differs from the distributed
-        # aggregation's — which the 6-d.p. rounding absorbs by design (it
-        # already absorbs Spark's own nondeterministic partial-agg order).
-        # Rounding stays Spark-side.
-        if e.count() <= small_graph_threshold:
+        # driver fast path (sparkrdf.localdf): exact integer distances; the
+        # Σ 1/d order differs, which the Spark-side 6-d.p. rounding absorbs
+        rows = collect_if_small(e)
+        if rows is not None:
             adj: dict = {}
             node_set: set = set()
-            for r in e.collect():
+            for r in rows:
                 adj.setdefault(r["u"], []).append(r["v"])
                 node_set.add(r["u"])
                 node_set.add(r["v"])
@@ -2034,7 +1987,6 @@ def personalized_pagerank(
     src: str = "src_host",
     dst: str = "dst_host",
     weight: str | None = "n_links",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Personalized PageRank: random walks with restart into a SEED set
     instead of the uniform distribution — relevance of every node to a
@@ -2056,10 +2008,9 @@ def personalized_pagerank(
     cols.append((F.col(weight) if weight else F.lit(1)).cast("double").alias("w"))
     e = edges.select(*cols)
     e = e.persist()
-    # driver fast path — see pagerank() for the exactness argument (same
-    # per-edge arithmetic, 6-d.p. rounding stays Spark-side)
-    if e.count() <= small_graph_threshold:
-        rows = [(r["s"], r["t"], r["w"]) for r in e.collect()]
+    # driver fast path — see pagerank() for the exactness argument
+    rows = collect_if_small(e)
+    if rows is not None:
         e.unpersist()
         ow: dict = {}
         nodes: set = set()
@@ -2165,7 +2116,6 @@ def node2vec_walks(
     seed: int = 7,
     src: str = "u",
     dst: str = "v",
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Deterministic node2vec walks (Grover-Leskovec KDD 2016): the
     second-order biased companion to :func:`random_walks`. At ``cur``
@@ -2202,13 +2152,13 @@ def node2vec_walks(
 
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).dropDuplicates()
     e = e.localCheckpoint(eager=True)
-    # Threshold-gated driver fast path: every hop is integer md5 arithmetic
-    # over the t-sorted neighbor index — bit-identical to the distributed
-    # cumulative-weight draw (the walk is deterministic by construction).
-    if e.count() <= small_graph_threshold:
+    # driver fast path (sparkrdf.localdf): every hop is integer md5
+    # arithmetic, bit-identical to the distributed cumulative-weight draw
+    rows = collect_if_small(e)
+    if rows is not None:
         adj: dict = {}
         edge_set: set = set()
-        for r0 in e.collect():
+        for r0 in rows:
             adj.setdefault(r0["s"], []).append(r0["t"])
             edge_set.add((r0["s"], r0["t"]))
         for s0 in adj:
@@ -2253,18 +2203,13 @@ def node2vec_walks(
                         nxt_cur.append((start, wn, node, cx))
                         break
             cur = nxt_cur
-        from pyspark.sql import types as _T
-
         idt = e.schema["s"].dataType
-        schema = _T.StructType(
-            [
-                _T.StructField("start", idt),
-                _T.StructField("walk_no", _T.IntegerType()),
-                _T.StructField("step", _T.IntegerType()),
-                _T.StructField("node", idt),
-            ]
+        return local_rows_df(
+            edges.sparkSession,
+            sorted(out_rows),
+            [("start", idt), ("walk_no", IntegerType()),
+             ("step", IntegerType()), ("node", idt)],
         )
-        return edges.sparkSession.createDataFrame(sorted(out_rows), schema)
     # neighbor index (window-free, same construction as random_walks)
     ranked = global_rank(e, ["s", "t"])
     idx = (
@@ -2354,7 +2299,6 @@ def betweenness(
     max_t: int = 4,
     source_mod: int = 1,
     seed: int = 7,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Betweenness centrality by level-synchronous Brandes (Brandes 2001),
     depth-bounded at ``max_t`` and over a DETERMINISTIC source sample —
@@ -2383,14 +2327,13 @@ def betweenness(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    # Threshold-gated driver fast path: level-synchronous Brandes with the
-    # identical source sample (same md5 arithmetic), exact integer-valued σ,
-    # and the same depth bound; the δ accumulation order differs, which the
-    # 6-d.p. output rounding absorbs (rounding stays Spark-side).
-    if e.count() <= small_graph_threshold:
+    # driver fast path (sparkrdf.localdf): the same md5 source sample and
+    # exact σ; the δ order differs, which the Spark-side rounding absorbs
+    rows = collect_if_small(e)
+    if rows is not None:
         adj: dict = {}
         node_set: set = set()
-        for r0 in e.collect():
+        for r0 in rows:
             adj.setdefault(r0["es"], []).append(r0["et"])
             node_set.add(r0["es"])
             node_set.add(r0["et"])
@@ -2435,13 +2378,7 @@ def betweenness(
                         if b != a:
                             out[b] = out.get(b, 0.0) + dv
                 delta = new_delta
-        from pyspark.sql import types as _T
-
-        idt = e.schema["es"].dataType
-        schema = _T.StructType(
-            [_T.StructField("n", idt), _T.StructField("bt", _T.DoubleType())]
-        )
-        out_df = edges.sparkSession.createDataFrame(sorted(out.items()), schema)
+        out_df = _ranks_df(edges.sparkSession, out, e.schema["es"].dataType, col="bt")
         return out_df.select("n", F.round("bt", 6).alias("betweenness"))
     nodes = (
         e.select(F.col("es").alias("n"))
@@ -2580,7 +2517,6 @@ def closeness_centrality(
     src: str = "u",
     dst: str = "v",
     max_t: int = 8,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Bounded closeness centrality over OUTGOING distances —
     Wasserman-Faust normalized: ``C(v) = (r−1)/(n−1) · (r−1)/Σd`` with
@@ -2600,14 +2536,13 @@ def closeness_centrality(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    # Threshold-gated driver fast path: r and Σd are exact integers, and
-    # the Wasserman-Faust formula is two divisions and a product of them —
-    # fully deterministic floats (no summation-order sensitivity at all);
-    # rounding stays Spark-side.
-    if e.count() <= small_graph_threshold:
+    # driver fast path (sparkrdf.localdf): r and Σd are exact integers, so
+    # the Wasserman-Faust floats are deterministic; rounding is Spark-side
+    rows = collect_if_small(e)
+    if rows is not None:
         adj: dict = {}
         node_set: set = set()
-        for r0 in e.collect():
+        for r0 in rows:
             adj.setdefault(r0["u"], []).append(r0["v"])
             node_set.add(r0["u"])
             node_set.add(r0["v"])

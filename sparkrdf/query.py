@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkrdf.localdf import collect_if_small, local_max, local_rows_df
+
 
 def _is_var(term: str) -> bool:
     return term.startswith("?")
@@ -205,8 +207,8 @@ def khop(
 
 def _closure_local(pairs: list[tuple], cap: int) -> list[tuple] | None:
     """Exact transitive closure of a small pair list on the driver (per-source
-    DFS over the adjacency map) — the same threshold-gated fast-path pattern
-    as ``sparkrdf.dedupe.connected_components``. Returns None when the closure
+    DFS over the adjacency map) — a driver fast path (see
+    :mod:`sparkrdf.localdf`). Returns None when the closure
     would exceed ``cap`` rows, signalling the caller to fall back to the
     distributed doubling loop (driver memory stays bounded by construction)."""
     adj: dict = {}
@@ -230,7 +232,6 @@ def _closure_local(pairs: list[tuple], cap: int) -> list[tuple] | None:
 
 def path_closure(
     edges: DataFrame, src: str = "s", dst: str = "o", max_doubling: int = 6,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Transitive closure of a binary relation — the SPARQL ``p+`` property
     path / AQL unbounded traversal, as a set: every ``(s, o)`` with a
@@ -252,25 +253,17 @@ def path_closure(
         .localCheckpoint(eager=True)
     )
     n = r.count()
-    # Threshold-gated driver fast path (the connected_components pattern):
-    # ontology/taxonomy-sized relations — the dominant caller profile, e.g.
-    # rdfs_materialize's subclass/subproperty hierarchies — close in one
-    # driver pass instead of O(log depth) join+dedup+count Spark jobs. The
-    # result-size cap bounds driver memory; exceeding either threshold falls
-    # through to the distributed doubling loop, so 100 TB inputs never land
-    # on the driver. SPARKRDF_LOCAL_CLOSURE_MAX=0 disables the fast path.
-    if local_threshold is None:
-        import os
-
-        local_threshold = int(os.environ.get("SPARKRDF_LOCAL_CLOSURE_MAX", "20000"))
-    if n <= local_threshold:
+    # driver fast path at the closure budget (sparkrdf.localdf): ontology-
+    # sized relations close in one driver pass; over the result cap, fall
+    # through to the distributed doubling loop
+    max_rows = local_max() // 100
+    rows = collect_if_small(r, max_rows, count=n)
+    if rows is not None:
         closed = _closure_local(
-            [(row["s"], row["o"]) for row in r.collect()],
-            cap=max(50 * local_threshold, 1_000_000),
+            [(row["s"], row["o"]) for row in rows],
+            cap=max(50 * max_rows, 1_000_000),
         )
         if closed is not None:
-            from sparkrdf.localdf import local_rows_df
-
             return local_rows_df(edges.sparkSession, closed, r.schema)
     for _ in range(max_doubling):
         a, b = r.alias("a"), r.alias("b")
@@ -684,7 +677,6 @@ def describe_cbd(
     o_kind_col: str = "o_kind",
     bnode_kind: str = "BNode",
     max_rounds: int = 10,
-    small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """SPARQL ``DESCRIBE`` as a Concise Bounded Description (CBD): for every
     seed resource, its outgoing statements plus — recursively — the
@@ -703,18 +695,14 @@ def describe_cbd(
     table against the accumulated subject set — statements rows are never
     duplicated or widened mid-loop. Depth is bounded by the deepest bnode
     chain (data, not corpus, sized); exhausting ``max_rounds`` RAISES
-    rather than returning a silently truncated description.
-
-    Threshold-gated driver fast path (the connected_components pattern):
-    when the materialized bnode-edge and seed tables are both under
-    ``small_graph_threshold`` rows, the BFS runs as a driver loop — the
-    identical frontier/visited set algebra, integer-free and
-    order-independent — and only the final semi-join stays distributed.
-    Larger inputs take the per-round join loop automatically.
+    rather than returning a silently truncated description. Small inputs
+    run the same BFS as a driver loop (see :mod:`sparkrdf.localdf`).
     """
     seed_col = subjects.columns[0]
+    # NULL terms match no join key, so neither path may carry them
     visited = (
         subjects.select(F.col(seed_col).alias("n"))
+        .dropna()
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
@@ -725,55 +713,48 @@ def describe_cbd(
     bn_edges = (
         stmts.filter(F.col(o_kind_col) == bnode_kind)
         .select(F.col(s_col).alias("_s"), F.col(o_col).alias("_o"))
+        .dropna()
         .persist()
     )
-    if (
-        bn_edges.count() <= small_graph_threshold
-        and visited.count() <= small_graph_threshold
-    ):
-        adj: dict = {}
-        for r in bn_edges.collect():
-            adj.setdefault(r["_s"], []).append(r["_o"])
-        bn_edges.unpersist()
-        vis = {r["n"] for r in visited.collect()}
-        frontier_set = vis
-        for _ in range(max_rounds):
-            new = {
-                o
-                for s in frontier_set
-                for o in adj.get(s, ())
-                if o not in vis
-            }
-            if not new:
-                visited_df = stmts.sparkSession.createDataFrame(
-                    [(v,) for v in sorted(vis)], visited.schema
-                )
-                return stmts.join(
-                    visited_df, stmts[s_col] == visited_df["n"], "left_semi"
-                )
-            vis |= new
-            frontier_set = new
-        raise RuntimeError(
-            f"describe_cbd blank-node closure deeper than {max_rounds} rounds; "
-            "raise max_rounds"
-        )
     try:
-        frontier = visited
-        for _ in range(max_rounds):
-            reached = (
-                bn_edges.join(frontier, bn_edges["_s"] == frontier["n"], "left_semi")
-                .select(F.col("_o").alias("n"))
-                .dropDuplicates()
-                .join(visited, "n", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if reached.isEmpty():
-                return stmts.join(
-                    visited, stmts[s_col] == visited["n"], "left_semi"
+        # driver fast path: the same frontier/visited set algebra; only the
+        # final semi-join stays distributed
+        edge_rows = collect_if_small(bn_edges)
+        seed_rows = collect_if_small(visited) if edge_rows is not None else None
+        if seed_rows is not None:
+            adj: dict = {}
+            for s, o in edge_rows:
+                adj.setdefault(s, []).append(o)
+            vis = {r["n"] for r in seed_rows}
+            frontier_set = vis
+            for _ in range(max_rounds):
+                new = {o for s in frontier_set for o in adj.get(s, ()) if o not in vis}
+                if not new:
+                    visited_df = local_rows_df(
+                        stmts.sparkSession, [(v,) for v in sorted(vis)], visited.schema
+                    )
+                    return stmts.join(
+                        visited_df, stmts[s_col] == visited_df["n"], "left_semi"
+                    )
+                vis |= new
+                frontier_set = new
+        else:
+            frontier = visited
+            for _ in range(max_rounds):
+                reached = (
+                    bn_edges.join(frontier, bn_edges["_s"] == frontier["n"], "left_semi")
+                    .select(F.col("_o").alias("n"))
+                    .dropDuplicates()
+                    .join(visited, "n", "left_anti")
+                    .localCheckpoint(eager=True)
                 )
-            # union of checkpointed frontiers — no checkpoint of the set needed
-            visited = visited.unionAll(reached)
-            frontier = reached
+                if reached.isEmpty():
+                    return stmts.join(
+                        visited, stmts[s_col] == visited["n"], "left_semi"
+                    )
+                # union of checkpointed frontiers — no checkpoint of the set needed
+                visited = visited.unionAll(reached)
+                frontier = reached
         raise RuntimeError(
             f"describe_cbd blank-node closure deeper than {max_rounds} rounds; "
             "raise max_rounds"

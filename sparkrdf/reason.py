@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkrdf import terms as T
-from sparkrdf.query import path_closure
+from sparkrdf.localdf import collect_if_small, local_max, local_rows_df
+from sparkrdf.query import _closure_local, path_closure
 
 RDFS_SUBCLASS = T.RDFS_NS + "subClassOf"
 RDFS_SUBPROP = T.RDFS_NS + "subPropertyOf"
@@ -108,8 +109,6 @@ def rdfs_materialize(
     # checkpoint+count Spark jobs per closure over a handful of rows; each
     # table re-enters the plan as a broadcast local relation. (The closure
     # itself is query.path_closure's driver fast path, shared here.)
-    from sparkrdf.query import _closure_local
-
     spark = triples.sparkSession
     onto_rows = [(r["s"], r["p"], r["o"]) for r in onto.collect()]
 
@@ -462,41 +461,32 @@ def owl_materialize(
     r = t1.filter(_is_in(F.col("p"), trans_props))
     n = r.count()
     closed = r
-    # Threshold-gated driver fast path (same pattern as query.path_closure /
-    # dedupe.connected_components): declared-transitive edge sets are usually
-    # dimension-sized next to the triple stream; when the materialized count
-    # is under the threshold, close per property on the driver in one pass
-    # instead of O(log depth) join+dedup+count jobs. The cap bounds driver
-    # memory; None falls through to the distributed doubling loop.
-    if n:
-        import os
-
-        local_max = int(os.environ.get("SPARKRDF_LOCAL_CLOSURE_MAX", "20000"))
-        if n <= local_max:
-            from sparkrdf.query import _closure_local
-
-            by_p: dict = {}
-            for row in r.collect():
-                by_p.setdefault(row["p"], []).append((row["s"], row["o"]))
-            cap = max(50 * local_max, 1_000_000)
-            rows: list | None = []
-            # r's column ORDER follows the semi-join (key column first) —
-            # build each tuple in that exact order, not an assumed (s,p,o)
-            order = r.columns
-            for p, pairs in by_p.items():
-                loc = _closure_local(pairs, cap=cap)
-                if loc is None or len(rows) + len(loc) > cap:
-                    rows = None
-                    break
-                rows.extend(
-                    tuple({"s": s, "p": p, "o": o}[c] for c in order)
-                    for s, o in loc
-                )
-            if rows is not None:
-                from sparkrdf.localdf import local_rows_df
-
-                closed = local_rows_df(t1.sparkSession, rows, r.schema)
-                n = None  # fast path taken; skip the distributed loop
+    # driver fast path at the closure budget (sparkrdf.localdf), per
+    # property in one pass; over the result cap, fall through to the
+    # distributed doubling loop
+    max_rows = local_max() // 100
+    got = collect_if_small(r, max_rows, count=n) if n else None
+    if got is not None:
+        by_p: dict = {}
+        for row in got:
+            by_p.setdefault(row["p"], []).append((row["s"], row["o"]))
+        cap = max(50 * max_rows, 1_000_000)
+        rows: list | None = []
+        # r's column ORDER follows the semi-join (key column first) —
+        # build each tuple in that exact order, not an assumed (s,p,o)
+        order = r.columns
+        for p, pairs in by_p.items():
+            loc = _closure_local(pairs, cap=cap)
+            if loc is None or len(rows) + len(loc) > cap:
+                rows = None
+                break
+            rows.extend(
+                tuple({"s": s, "p": p, "o": o}[c] for c in order)
+                for s, o in loc
+            )
+        if rows is not None:
+            closed = local_rows_df(t1.sparkSession, rows, r.schema)
+            n = None  # fast path taken; skip the distributed loop
     if n:
         for _ in range(max_doubling):
             a, b = closed.alias("a"), closed.alias("b")

@@ -154,19 +154,41 @@ public class VecSqDist implements UDF2<Seq<Object>, Seq<Object>, Double> {
 """
 
 
+_UDF_SOURCES = (
+    ("FarmHashKey", _FARMHASH_JAVA),
+    ("VecDot", _VECOPS_JAVA),
+    ("VecSqDist", _VECSQD_JAVA),
+)
+
+
+def _jar_has_udfs(path: str) -> bool:
+    try:
+        with zipfile.ZipFile(path) as z:
+            names = set(z.namelist())
+    except (OSError, zipfile.BadZipFile):
+        return False
+    return all(f"sparkrdf/{cls}.class" in names for cls, _ in _UDF_SOURCES)
+
+
 def ensure_farmhash_jar() -> str | None:
-    """Compile the JVM farmhash UDF into a jar (cached in tmp; rebuilt when
-    this module is newer). Returns None when no javac is available — callers
-    fall back to the Arrow-batched Python UDFs."""
+    """Compile the JVM UDFs (farmhash key, vector folds) into a jar cached
+    in the temp dir as ``sparkrdf-udfs-<sha256 of the Java sources>.jar``:
+    edited sources get a new name, and a cached jar missing any UDF class is
+    rebuilt. Returns None when no javac is available — callers fall back to
+    the Arrow-batched Python UDFs and the HOF vector folds."""
+    import hashlib
     import shutil
     import subprocess
 
     javac = shutil.which("javac")
     if javac is None:
         return None
-    jar_path = os.path.join(tempfile.gettempdir(), "sparkrdf-farmhash.jar")
-    src_mtime = os.path.getmtime(os.path.abspath(__file__))
-    if os.path.exists(jar_path) and os.path.getmtime(jar_path) >= src_mtime:
+    digest = hashlib.sha256()
+    for cls, code in _UDF_SOURCES:
+        digest.update(f"{cls}\0{code}\0".encode())
+    jar_dir = tempfile.gettempdir()
+    jar_path = os.path.join(jar_dir, f"sparkrdf-udfs-{digest.hexdigest()}.jar")
+    if _jar_has_udfs(jar_path):
         return jar_path
     try:
         import pyspark
@@ -176,12 +198,8 @@ def ensure_farmhash_jar() -> str | None:
             src_dir = os.path.join(tmp, "sparkrdf")
             os.makedirs(src_dir)
             srcs = []
-            for name, code in (
-                ("FarmHashKey.java", _FARMHASH_JAVA),
-                ("VecDot.java", _VECOPS_JAVA),
-                ("VecSqDist.java", _VECSQD_JAVA),
-            ):
-                src = os.path.join(src_dir, name)
+            for cls, code in _UDF_SOURCES:
+                src = os.path.join(src_dir, f"{cls}.java")
                 with open(src, "w", encoding="utf-8") as f:
                     f.write(code)
                 srcs.append(src)
@@ -193,13 +211,19 @@ def ensure_farmhash_jar() -> str | None:
                 capture_output=True,
                 timeout=120,
             )
-            tmp_jar = jar_path + ".tmp"
-            with zipfile.ZipFile(tmp_jar, "w") as z:
-                for root, _dirs, files in os.walk(out):
-                    for fn in sorted(files):
-                        full = os.path.join(root, fn)
-                        z.write(full, os.path.relpath(full, out))
-            os.replace(tmp_jar, jar_path)
+            # a unique temp name in the target dir, then an atomic rename:
+            # concurrent builders never read each other's half-written jar
+            fd, tmp_jar = tempfile.mkstemp(suffix=".jar.tmp", dir=jar_dir)
+            try:
+                with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+                    for root, _dirs, files in os.walk(out):
+                        for fn in sorted(files):
+                            full = os.path.join(root, fn)
+                            z.write(full, os.path.relpath(full, out))
+                os.replace(tmp_jar, jar_path)
+            except BaseException:
+                os.unlink(tmp_jar)
+                raise
         return jar_path
     except Exception:
         return None

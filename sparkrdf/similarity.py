@@ -70,11 +70,11 @@ def _vec_udfs_available() -> bool:
     return ok
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential left-to-right dot-product fold.
+def _dot(a: Column, b: Column) -> Column:
+    """Sequential left-to-right dot-product fold; each element is widened to
+    double before the multiply, as in VecDot.
 
-    ``dim`` is accepted (and ignored) for call-site stability: a fixed-dim
-    UNROLLED chain was measured this round and REGRESSED 2-5× — a 64-term
+    A fixed-dim UNROLLED chain was measured and REGRESSED 2-5× — a 64-term
     expression tree per product multiplies Catalyst optimization time and
     generated-code size past the JIT sweet spot (sim_lsh_topk 1.4 s → 8.0 s
     with 640 unrolled terms), far outweighing the interpreted-HOF overhead
@@ -82,13 +82,13 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     if _vec_udfs_available():
         return F.call_udf("sparkrdf_vdot", a, b)
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
     )
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
+def _norm(a: Column) -> Column:
     # self-dot == the HOF fold acc + v.cast(double)*v, element for element
     if _vec_udfs_available():
         return F.sqrt(F.call_udf("sparkrdf_vdot", a, a))
@@ -97,19 +97,12 @@ def _norm(a: Column, dim: int | None = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    if _vec_udfs_available():
-        # VecDot widens each element float->double exactly as the explicit
-        # transform casts do
-        return F.call_udf("sparkrdf_vdot", a, b) / (_norm(a) * _norm(b))
-    return _dot(
-        F.transform(a, lambda v: v.cast("double")), F.transform(b, lambda v: v.cast("double"))
-    ) / (_norm(a) * _norm(b))
+def cosine(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def brute_force_topk(
     emb: DataFrame, query_id: int = 0, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine vs the row with id == query_id.
 
@@ -121,7 +114,7 @@ def brute_force_topk(
         .filter(F.col(id_col) != query_id)
         .select(
             F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias("score"),
+            F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score"),
         )
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
@@ -134,7 +127,6 @@ def blocked_near_dup(
     vec_col: str = "embedding",
     block_col: str = "label",
     max_block_rows: int = 10_000,
-    dim: int | None = None,
 ) -> DataFrame:
     """Cosine near-dup pairs within blocks: (id_a, id_b, score ≥ threshold).
 
@@ -160,13 +152,13 @@ def blocked_near_dup(
     )
     a = emb.select(
         F.col(block_col).alias("blk"), F.col(id_col).alias("id_a"),
-        dv.alias("va"), _norm(F.col(vec_col), dim).alias("na"),
+        dv.alias("va"), _norm(F.col(vec_col)).alias("na"),
     ).join(sizes, "blk").withColumn(
         "salt", F.pmod(F.xxhash64(F.col("id_a")), F.col("n_salt")).cast("int")
     ).drop("n_salt")
     b = emb.select(
         F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"),
-        dv.alias("vb"), _norm(F.col(vec_col), dim).alias("nb"),
+        dv.alias("vb"), _norm(F.col(vec_col)).alias("nb"),
     ).join(sizes, "blk").withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1))
     ).drop("n_salt")
@@ -177,7 +169,7 @@ def blocked_near_dup(
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), 6
+                _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
             ).alias("score"),
         )
         .filter(F.col("score") >= threshold)
@@ -192,7 +184,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "label",
-    dim: int | None = None,
 ) -> DataFrame:
     """Two-stage approximate search: probe the n_probe closest cells (by
     centroid cosine), exact cosine inside. Returns (vec_id, score)."""
@@ -214,7 +205,7 @@ def ivf_topk(
     )
     probed = (
         cells.crossJoin(F.broadcast(q))
-        .select("cell", cosine(F.col("centroid"), F.col("qvec"), dim).alias("cscore"))
+        .select("cell", cosine(F.col("centroid"), F.col("qvec")).alias("cscore"))
         .orderBy(F.col("cscore").desc(), F.col("cell").asc())
         .limit(n_probe)
     )
@@ -222,7 +213,7 @@ def ivf_topk(
         F.broadcast(probed.select(F.col("cell").alias(cell_col))), cell_col, "inner"
     ).filter(F.col(id_col) != query_id)
     scored = cand.crossJoin(F.broadcast(q.select("qvec"))).select(
-        F.col(id_col), F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias("score")
+        F.col(id_col), F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score")
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
@@ -299,19 +290,24 @@ def lsh_cosine_topk(
     cand = sigs.join(F.broadcast(probed), "sig").filter(F.col(id_col) != query_id)
     scored = cand.crossJoin(F.broadcast(q.select("qvec"))).select(
         F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("qvec"), dim), 6).alias("score"),
+        F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("score"),
     )
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
-def _sqdist(a: Column, b: Column, dim: int | None = None) -> Column:
+def _sqdist(a: Column, b: Column) -> Column:
     """Squared euclidean distance — sequential fold over dimensions, the
-    identical accumulation order the DuckDB oracle's list_sum uses.
-    (``dim`` ignored — see :func:`_dot` for why unrolling regressed.)"""
+    identical accumulation order the DuckDB oracle's list_sum uses; each
+    element is widened to double first, as in VecSqDist."""
     if _vec_udfs_available():
         return F.call_udf("sparkrdf_vsqd", a, b)
+
+    def sq_diff(x: Column, y: Column) -> Column:
+        d = x.cast("double") - y.cast("double")
+        return d * d
+
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.zip_with(a, b, sq_diff),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
     )
@@ -344,7 +340,6 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     init_col: str = "label",
-    dim: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding column with deterministic
     initialization: the starting centroids are the per-``init_col`` means
@@ -380,7 +375,7 @@ def kmeans_assign(
     ).localCheckpoint(eager=True)
 
     def assign(cents: DataFrame) -> DataFrame:
-        d = F.round(_sqdist(F.col("dv"), F.col("centroid"), dim), 9)
+        d = F.round(_sqdist(F.col("dv"), F.col("centroid")), 9)
         return (
             vecs.crossJoin(F.broadcast(cents))
             .select(F.col(id_col), F.col("cluster"), d.alias("dist"))
@@ -408,7 +403,6 @@ def knn_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Distributed kNN self-join: for EVERY row, its top-k cosine
     neighbors — the all-rows generalization of :func:`brute_force_topk`
@@ -436,7 +430,7 @@ def knn_join(
         cell.alias("_cell"),
         F.col(id_col).alias("_id"),
         dv.alias("_v"),
-        _norm(F.col(vec_col), dim).alias("_n"),
+        _norm(F.col(vec_col)).alias("_n"),
         # a zero vector has no direction: its cosine is NaN, and NaN sorts
         # ABOVE all doubles in a descending window — it would rank as the
         # #1 neighbor of every row in its cell. Exclude it on both sides.
@@ -456,7 +450,7 @@ def knn_join(
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), 6
+                _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
             ).alias("score"),
         )
     )

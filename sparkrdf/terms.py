@@ -97,16 +97,6 @@ def adb_label(id_col: Column) -> Column:
     return F.when(seg == "", id_col).otherwise(seg)
 
 
-def literal_value_kind(datatype_col: Column) -> Column:
-    """Categorize a literal datatype into int/float/bool/str rendering."""
-    return (
-        F.when(datatype_col.isin(*sorted(_INT_DATATYPES)), F.lit("int"))
-        .when(datatype_col.isin(*sorted(_FLOAT_DATATYPES)), F.lit("float"))
-        .when(datatype_col == XSD + "boolean", F.lit("bool"))
-        .otherwise(F.lit("str"))
-    )
-
-
 def literal_value_str(lex_col: Column, datatype_col: Column) -> Column:
     """Canonical string rendering of __get_literal_val (main.py:3897-3914).
 

@@ -140,7 +140,7 @@ def test_textops(spark):
     assert 0 <= out["en-ish"]["q"] <= 100
 
 
-def test_connected_components_shapes(spark):
+def test_connected_components_shapes(spark, monkeypatch):
     """Hash-to-min components: chain, triangle, isolated pair — component is
     the min reachable id; a 6-hop chain needs the doubling jumps (one round
     of neighbor-min alone would not converge)."""
@@ -162,11 +162,12 @@ def test_connected_components_shapes(spark):
     assert {k: v for k, v in got.items() if 10 <= k <= 12} == {10: 10, 11: 10, 12: 10}
     assert got[20] == 20 and got[21] == 20
 
-    # the distributed loop (forced via threshold=0) must produce labels
-    # byte-identical to the adaptive driver-side fast path above
+    # the distributed loop (forced via SPARKRDF_LOCAL_MAX=0) must produce
+    # labels byte-identical to the driver fast path above
+    monkeypatch.setenv("SPARKRDF_LOCAL_MAX", "0")
     dist = {
         r["node"]: r["component"]
-        for r in connected_components(pairs, small_graph_threshold=0).collect()
+        for r in connected_components(pairs).collect()
     }
     assert dist == got
 
@@ -663,16 +664,18 @@ def test_jvm_vector_folds_bit_equal_hof(spark, monkeypatch):
     BIT-equal to the Catalyst aggregate(zip_with) folds they replace —
     same left-to-right accumulation, exact float->double widening, the
     zip_with null/length contract — across dots, norms, cosines, squared
-    distances and the LSH signature."""
+    distances and the LSH signature, on double and raw float inputs."""
+    import shutil
     import struct
+
+    import pytest
 
     import sparkrdf.similarity as S
     from pyspark.sql import functions as F
 
-    if not S._vec_udfs_available():  # no javac in this environment
-        import pytest
-
-        pytest.skip("JVM vector UDFs unavailable")
+    if shutil.which("javac") is None:
+        pytest.skip("no javac: the JVM vector UDFs cannot be built")
+    assert S._vec_udfs_available(), "javac present but the JVM vector UDFs are unavailable"
 
     rows = [
         (1, [1.0, 0.5, -0.25, 3.0]),
@@ -686,9 +689,12 @@ def test_jvm_vector_folds_bit_equal_hof(spark, monkeypatch):
 
     def proj():
         dv = F.col("embedding").cast("array<double>")
+        fv = F.col("embedding")
         return emb.select(
             "vec_id",
             S._dot(dv, F.reverse(dv)).alias("d"),
+            S._dot(fv, F.reverse(fv)).alias("fd"),
+            S._sqdist(fv, F.reverse(fv)).alias("fq"),
             S._norm(F.col("embedding")).alias("n"),
             S.cosine(F.col("embedding"), F.reverse(F.col("embedding"))).alias("c"),
             S._sqdist(dv, F.reverse(dv)).alias("q"),
@@ -706,7 +712,7 @@ def test_jvm_vector_folds_bit_equal_hof(spark, monkeypatch):
 
     for a, b in zip(jvm, hof):
         assert a["vec_id"] == b["vec_id"]
-        for f in ("d", "n", "q"):
+        for f in ("d", "n", "q", "fd", "fq"):
             assert bits(a[f]) == bits(b[f]), (a["vec_id"], f)
         assert bits(a["c"]) == bits(b["c"]), a["vec_id"]
         assert a["sig"] == b["sig"]

@@ -127,3 +127,38 @@ def test_jvm_and_python_udf_paths_agree(spark):
     for r in got:
         assert r["jt"].asDict() == r["pt"].asDict()
         assert r["je"] == r["pe"]
+
+
+def test_udf_jar_cache_rebuilds_incomplete_jar(tmp_path, monkeypatch):
+    """The UDF jar is cached under the sha256 of its Java sources; a cached
+    jar at that path that lacks a UDF class is rebuilt, not reused."""
+    import os
+    import re
+    import shutil
+    import tempfile
+    import zipfile
+
+    import pytest
+
+    from sparkrdf.session import ensure_farmhash_jar
+
+    if shutil.which("javac") is None:
+        pytest.skip("no javac: the UDF jar cannot be built")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    path = ensure_farmhash_jar()
+    name = os.path.basename(path)
+    assert os.path.dirname(path) == str(tmp_path)
+    assert re.fullmatch(r"sparkrdf-udfs-[0-9a-f]{64}\.jar", name)
+
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("sparkrdf/FarmHashKey.class", b"stale")
+    assert ensure_farmhash_jar() == path
+    with zipfile.ZipFile(path) as z:
+        names = set(z.namelist())
+        assert z.read("sparkrdf/FarmHashKey.class") != b"stale"
+    assert {
+        "sparkrdf/FarmHashKey.class",
+        "sparkrdf/VecDot.class",
+        "sparkrdf/VecSqDist.class",
+    } <= names
+    assert os.listdir(tmp_path) == [name]  # no temp file left behind

@@ -234,37 +234,39 @@ def _pr_directed_ref(edges, damping=0.85, n_iter=10):
     return {n: round(p, 6) for n, p in pr.items()}
 
 
-def test_pagerank_family_fast_path_matches_distributed(spark):
-    """The threshold-gated driver power iteration must reproduce the
-    distributed loop's rounded scores exactly (same per-edge arithmetic;
-    rounding applied Spark-side in both paths)."""
+def _fast_and_distributed(monkeypatch, run):
+    """``run()``'s rows with the driver fast paths on (the default
+    ``SPARKRDF_LOCAL_MAX``) and forced off (``0``), as two sets."""
+    monkeypatch.delenv("SPARKRDF_LOCAL_MAX", raising=False)
+    fast = {tuple(r) for r in run().collect()}
+    monkeypatch.setenv("SPARKRDF_LOCAL_MAX", "0")
+    slow = {tuple(r) for r in run().collect()}
+    monkeypatch.delenv("SPARKRDF_LOCAL_MAX")
+    return fast, slow
+
+
+def test_pagerank_family_fast_path_matches_distributed(spark, monkeypatch):
+    """The driver power iteration must reproduce the distributed loop's
+    rounded scores exactly (same per-edge arithmetic; rounding applied
+    Spark-side in both paths)."""
     from sparkrdf.graphops import pagerank, pagerank_directed, personalized_pagerank
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "c")]
     und = spark.createDataFrame(edges, "u string, v string")
-    fast = {(r.n, r.pr) for r in pagerank(und).collect()}
-    slow = {(r.n, r.pr) for r in pagerank(und, small_graph_threshold=0).collect()}
+    fast, slow = _fast_and_distributed(monkeypatch, lambda: pagerank(und))
     assert fast == slow
 
     wde = spark.createDataFrame(
         [(u, v, 1 + i % 3) for i, (u, v) in enumerate(edges)],
         "src_host string, dst_host string, n_links long",
     )
-    fast = {(r.n, r.pr) for r in pagerank_directed(wde).collect()}
-    slow = {
-        (r.n, r.pr)
-        for r in pagerank_directed(wde, small_graph_threshold=0).collect()
-    }
+    fast, slow = _fast_and_distributed(monkeypatch, lambda: pagerank_directed(wde))
     assert fast == slow
 
     seeds = spark.createDataFrame([("a",), ("e",)], "n string")
-    fast = {(r.n, r.pr) for r in personalized_pagerank(wde, seeds).collect()}
-    slow = {
-        (r.n, r.pr)
-        for r in personalized_pagerank(
-            wde, seeds, small_graph_threshold=0
-        ).collect()
-    }
+    fast, slow = _fast_and_distributed(
+        monkeypatch, lambda: personalized_pagerank(wde, seeds)
+    )
     assert fast == slow
 
 
@@ -478,7 +480,7 @@ def test_cluster_split_keeps_near_dup_families_together(spark):
     assert out[77] == (77, exp)
 
 
-def test_path_closure_chain_and_convergence(spark):
+def test_path_closure_chain_and_convergence(spark, monkeypatch):
     import pytest as _pytest
 
     from sparkrdf.query import path_closure
@@ -493,17 +495,18 @@ def test_path_closure_chain_and_convergence(spark):
     got = {(r.s, r.o) for r in path_closure(cyc).collect()}
     assert got == {("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")}
     # exhausted doubling bound raises instead of silently truncating
-    # (local_threshold=0 forces the distributed loop the bound guards)
+    # (SPARKRDF_LOCAL_MAX=0 forces the distributed loop the bound guards)
     deep = spark.createDataFrame(
         [(f"m{i}", f"m{i+1}") for i in range(5)], "s string, o string"
     )
+    monkeypatch.setenv("SPARKRDF_LOCAL_MAX", "0")
     with _pytest.raises(RuntimeError):
-        path_closure(deep, max_doubling=1, local_threshold=0)
+        path_closure(deep, max_doubling=1)
 
 
-def test_path_closure_local_fast_path_matches_distributed(spark):
-    """The threshold-gated driver fast path must be row-identical to the
-    distributed doubling loop (chain, cycle, self-loop, fan shapes)."""
+def test_path_closure_local_fast_path_matches_distributed(spark, monkeypatch):
+    """The driver fast path must be row-identical to the distributed
+    doubling loop (chain, cycle, self-loop, fan shapes)."""
     from sparkrdf.query import path_closure
 
     shapes = [
@@ -514,11 +517,7 @@ def test_path_closure_local_fast_path_matches_distributed(spark):
     ]
     for pairs in shapes:
         df = spark.createDataFrame(pairs, "s string, o string")
-        fast = {(r.s, r.o) for r in path_closure(df).collect()}
-        slow = {
-            (r.s, r.o)
-            for r in path_closure(df, local_threshold=0).collect()
-        }
+        fast, slow = _fast_and_distributed(monkeypatch, lambda: path_closure(df))
         assert fast == slow, pairs
 
 
@@ -1212,10 +1211,13 @@ def test_scc_hand_graphs(spark):
     assert shared["d"] == "d"
 
 
-def test_iterative_graph_fast_paths_match_distributed(spark):
-    """Every threshold-gated driver fast path added for the bounded-graph
-    iterative operators must be row-identical to its distributed loop on
-    hand graphs (cycle+bridge, chain, hub, disconnected pair)."""
+def test_iterative_graph_fast_paths_match_distributed(spark, monkeypatch):
+    """Every driver fast path behind ``sparkrdf.localdf.collect_if_small``
+    must be row-identical to its distributed loop on hand graphs
+    (cycle+bridge, chain, hub, disconnected pair) and on the empty graph,
+    where an operator that raises must raise the same error on both. The
+    operators with their own parity test run here on the empty graph only."""
+    from sparkrdf.dedupe import connected_components
     from sparkrdf.graphops import (
         betweenness,
         closeness_centrality,
@@ -1226,41 +1228,62 @@ def test_iterative_graph_fast_paths_match_distributed(spark):
         label_propagation,
         neighborhood_function,
         node2vec_walks,
+        pagerank,
+        pagerank_directed,
+        personalized_pagerank,
+        scc,
     )
+    from sparkrdf.query import path_closure
 
     graphs = [
         [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
          ("d", "e"), ("e", "d"), ("e", "f"), ("g", "h")],
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("a", "c")],
         [("h", "x1"), ("h", "x2"), ("h", "x3"), ("x1", "x2"), ("x2", "x3")],
+        [],
     ]
+    seeds = spark.createDataFrame([("a",), ("h",)], "n string")
     ops = [
-        ("lpa", lambda df, thr: label_propagation(
-            df, iters=4, small_graph_threshold=thr)),
-        ("coreness", lambda df, thr: coreness(df, small_graph_threshold=thr)),
-        ("kcore", lambda df, thr: kcore(df, 2, small_graph_threshold=thr)),
-        ("ktruss", lambda df, thr: ktruss(df, 3, small_graph_threshold=thr)),
-        ("nf", lambda df, thr: neighborhood_function(
-            df, max_t=3, exact=True, small_graph_threshold=thr)),
-        ("harmonic", lambda df, thr: harmonic_centrality(
-            df, max_t=3, exact=True, small_graph_threshold=thr)),
-        ("closeness", lambda df, thr: closeness_centrality(
-            df, max_t=3, small_graph_threshold=thr)),
-        ("betweenness", lambda df, thr: betweenness(
-            df, max_t=3, source_mod=2, small_graph_threshold=thr)),
-        ("node2vec", lambda df, thr: node2vec_walks(
-            df, walk_len=3, walks_per_node=2, small_graph_threshold=thr)),
+        ("lpa", lambda df: label_propagation(df, iters=4)),
+        ("coreness", coreness),
+        ("kcore", lambda df: kcore(df, 2)),
+        ("ktruss", lambda df: ktruss(df, 3)),
+        ("nf", lambda df: neighborhood_function(df, max_t=3, exact=True)),
+        ("harmonic", lambda df: harmonic_centrality(df, max_t=3, exact=True)),
+        ("closeness", lambda df: closeness_centrality(df, max_t=3)),
+        ("betweenness", lambda df: betweenness(df, max_t=3, source_mod=2)),
+        ("node2vec", lambda df: node2vec_walks(df, walk_len=3, walks_per_node=2)),
     ]
+    empty_only = [
+        ("pagerank", pagerank),
+        ("pagerank_directed", lambda df: pagerank_directed(
+            df.withColumn("w", F.lit(1)), src="u", dst="v", weight="w")),
+        ("ppr", lambda df: personalized_pagerank(
+            df, seeds, src="u", dst="v", weight=None)),
+        ("scc", scc),
+        ("cc", lambda df: connected_components(df, id_a="u", id_b="v")),
+        ("path_closure", lambda df: path_closure(df, src="u", dst="v")),
+    ]
+
+    def outcome(run):
+        try:
+            return {tuple(r) for r in run().collect()}
+        except (RuntimeError, ValueError) as exc:
+            return repr(exc)
+
     for edges in graphs:
         df = spark.createDataFrame(edges, "u string, v string")
-        for name, run in ops:
-            fast = {tuple(r) for r in run(df, 2_000_000).collect()}
-            slow = {tuple(r) for r in run(df, 0).collect()}
+        for name, op in ops + (empty_only if not edges else []):
+            monkeypatch.delenv("SPARKRDF_LOCAL_MAX", raising=False)
+            fast = outcome(lambda: op(df))
+            monkeypatch.setenv("SPARKRDF_LOCAL_MAX", "0")
+            slow = outcome(lambda: op(df))
             assert fast == slow, (name, edges)
+            assert edges == [] or isinstance(fast, set), (name, fast)
 
 
-def test_scc_local_fast_path_matches_distributed(spark):
-    """The threshold-gated Tarjan fast path must be row-identical to the
+def test_scc_local_fast_path_matches_distributed(spark, monkeypatch):
+    """The driver Tarjan fast path must be row-identical to the
     distributed Forward-Backward-Trim loop on every hand graph."""
     from sparkrdf.graphops import scc
 
@@ -1276,11 +1299,7 @@ def test_scc_local_fast_path_matches_distributed(spark):
     ]
     for edges in graphs:
         df = spark.createDataFrame(edges, "u string, v string")
-        fast = {(r.n, r.scc) for r in scc(df).collect()}
-        slow = {
-            (r.n, r.scc)
-            for r in scc(df, small_graph_threshold=0).collect()
-        }
+        fast, slow = _fast_and_distributed(monkeypatch, lambda: scc(df))
         assert fast == slow, edges
 
 

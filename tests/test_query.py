@@ -498,6 +498,33 @@ def test_describe_cbd_follows_bnode_chain(spark):
     }
 
 
+def test_describe_cbd_null_terms_match_on_both_paths(spark, monkeypatch):
+    """A NULL seed and a NULL blank-node object or subject join nothing: the
+    driver fast path and the distributed loop (SPARKRDF_LOCAL_MAX=0) return
+    the same rows."""
+    from sparkrdf.query import describe_cbd
+
+    stmts = spark.createDataFrame(
+        [
+            ("a", "p1", "_:b1", "BNode"),
+            ("_:b1", "p2", "lit", "Literal"),
+            ("a", "p3", None, "BNode"),
+            (None, "p4", "_:b2", "BNode"),
+            ("_:b2", "p5", "lit2", "Literal"),
+        ],
+        "s string, p string, o string, o_kind string",
+    )
+    seeds = spark.createDataFrame([("a",), (None,)], "n string")
+    want = {("a", "p1", "_:b1"), ("_:b1", "p2", "lit"), ("a", "p3", None)}
+    for local_max in (None, "0"):
+        if local_max is None:
+            monkeypatch.delenv("SPARKRDF_LOCAL_MAX", raising=False)
+        else:
+            monkeypatch.setenv("SPARKRDF_LOCAL_MAX", local_max)
+        got = {(r.s, r.p, r.o) for r in describe_cbd(stmts, seeds).collect()}
+        assert got == want, local_max
+
+
 def test_describe_cbd_depth_raise(spark):
     from sparkrdf.query import describe_cbd
 

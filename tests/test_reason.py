@@ -247,7 +247,7 @@ def test_owl_unconverged_closure_raises(spark, monkeypatch):
 
     # force the distributed doubling loop (the bound under test guards it;
     # the driver fast path computes the exact closure without the bound)
-    monkeypatch.setenv("SPARKRDF_LOCAL_CLOSURE_MAX", "0")
+    monkeypatch.setenv("SPARKRDF_LOCAL_MAX", "0")
     chain = [(f"n{i}", "p", f"n{i+1}") for i in range(9)]
     t = spark.createDataFrame(chain, "s string, p string, o string")
     o = spark.createDataFrame(
@@ -258,7 +258,7 @@ def test_owl_unconverged_closure_raises(spark, monkeypatch):
 
 
 def test_owl_local_closure_fast_path_matches_distributed(spark, monkeypatch):
-    """The threshold-gated driver closure must be row-identical to the
+    """The driver fast-path closure must be row-identical to the
     distributed doubling loop, including per-property separation."""
     from sparkrdf import terms as T
     from sparkrdf.reason import owl_materialize
@@ -279,7 +279,7 @@ def test_owl_local_closure_fast_path_matches_distributed(spark, monkeypatch):
         "s string, p string, o string",
     )
     fast = {tuple(r) for r in owl_materialize(t, o).collect()}
-    monkeypatch.setenv("SPARKRDF_LOCAL_CLOSURE_MAX", "0")
+    monkeypatch.setenv("SPARKRDF_LOCAL_MAX", "0")
     slow = {tuple(r) for r in owl_materialize(t, o).collect()}
     assert fast == slow
     assert ("a", "p", "a") in fast  # cycle closes reflexively
